@@ -2034,6 +2034,15 @@ object GraftSink {
       * fully-bucketed after one merge. Semantics are identical to
       * [[merge]] (SinksSpec pins row equality).
       *
+      * Job shape: the eager checkpoint of the batch's latest-per-key
+      * (which also observes the touched buckets and the row count),
+      * the broadcast of the key side when it fits
+      * `spark.sql.autoBroadcastJoinThreshold`, the bucket exchange, and
+      * the write — four jobs, plus one per CHECK constraint and one for
+      * a live deletion vector in the touched buckets. An empty batch
+      * over a table with no unbucketed files publishes its version
+      * after the checkpoint alone.
+      *
       * Bucket spec is TABLE metadata (ADVICE r15): the merge stamps
       * `#buckets=numBuckets` in its manifest, and every later
       * mergeBucketed/[[lookup]] must pass the SAME count — a mismatch
@@ -2073,18 +2082,24 @@ object GraftSink {
       val w = Window.partitionBy(keyCols.map(col): _*)
         .orderBy(orderCols.map(c => col(c).desc): _*)
       // Materialize the batch's latest-per-key ONCE: it is consumed by
-      // the touched-bucket census, every CHECK-constraint probe, the
-      // anti-join's build side AND the union leg — without this each
-      // consumer re-scanned the batch and re-ran the window (~4 full
-      // recomputes per commit; guide §2.4). Bounded by the merge
-      // batch (micro-batch-sized at deployment), never by the table.
+      // every CHECK-constraint probe, the anti-join's build side AND
+      // the union leg — without this each consumer re-scanned the
+      // batch and re-ran the window (~4 full recomputes per commit;
+      // guide §2.4). Bounded by the merge batch (micro-batch-sized at
+      // deployment), never by the table. The touched-bucket census and
+      // the row count ride the checkpoint's own job as observed
+      // metrics (≤ numBuckets bucket ids), so sizing costs no job.
+      val census = org.apache.spark.sql.Observation()
       val latest = batch
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1).drop("__rn")
+        .observe(census,
+          collect_set(bucketOf(keyCols, numBuckets)).as("touched"),
+          count(lit(1)).as("rows"))
         .localCheckpoint()
-      val touched = latest
-        .select(bucketOf(keyCols, numBuckets).as("__b")).distinct()
-        .collect().map(_.getLong(0)).toSet // ≤ numBuckets rows
+      val observed = census.get
+      val touched = observed("touched").asInstanceOf[Iterable[Long]].toSet
+      val rows = observed("rows").asInstanceOf[Long]
       val (touchedLines, carried) =
         if (v == 0) (Seq.empty[String], Seq.empty[String])
         else manifestRawLines(fs, v).partition(l =>
@@ -2094,54 +2109,69 @@ object GraftSink {
         latest.drop(opCol).schema.fields)
       schemaGate(fs, v, outSchema)
       val standingChecks = checksOf(fs, v)
-      standingChecks.foreach { case (n, sqlTxt) =>
+      if (rows > 0) standingChecks.foreach { case (n, sqlTxt) =>
         require(latest.where(col(opCol) =!= "D").drop(opCol)
           .where(!expr(sqlTxt)).limit(1).count() == 0,
           s"$path: CHECK constraint '$n' ($sqlTxt) violated by this " +
             "merge batch — nothing was written")
       }
       val renameMap = renameOf(fs, v)
-      val current = readFiles(spark, fs, touchedFiles,
-        Some(asNullable(outSchema)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]),
-        dvSlicesOf(fs, v), renameMap)
-      val merged = current
-        .join(latest.select(keyCols.map(col): _*), keyCols, "left_anti")
-        .unionByName(latest.where(col(opCol) =!= "D").drop(opCol))
-        .withColumn("__bucket", bucketOf(keyCols, numBuckets))
-      // write the rewrite hive-partitioned by bucket, then publish
-      // carried ∪ new manifests with optimistic disjoint-merge rebase
       var newV = v + 1
-      val dataRel = s"_data/commit-$newV-${java.util.UUID.randomUUID}"
-      val dataDir = new org.apache.hadoop.fs.Path(root, dataRel)
-      // Cluster the rewrite by bucket before writing: the anti-join
-      // leaves `merged` hash-partitioned on keyCols (Spark's Murmur3),
-      // which is UNCORRELATED with bucketOf's xxhash64 — so a
-      // partitionBy write from that layout emits up to tasks×buckets
-      // splinter files per commit (~512 at 32 shuffle partitions × 16
-      // buckets; guide §6 — small files hurt twice: manifest/stat
-      // lines AND per-file open cost on every later read). One
-      // explicit exchange on __bucket lands exactly one file per
-      // touched bucket — the bucketed-table layout the manifest
-      // pruning is designed around (Delta's optimized-write shape).
-      // Sub-split OVERSIZED buckets (VERDICT r18 ask #8): one file per
-      // touched bucket is the layout contract, but a hot bucket's
-      // single rewrite file is unbounded — maxRecordsPerFile rolls a
-      // bucket's file at `maxRowsPerBucketFile` rows (default 4M ≈
-      // the guide-§6 128 MB–1 GB file band at CDC row widths), so a
-      // skewed key caps FILE size while small merges still land ≤1
-      // file per bucket (SinksSpec pins both). Manifest pruning is
-      // per-file by path bucket, so multi-file buckets carry/rewrite
-      // exactly like single-file ones.
-      toPhysical(merged.repartition(numBuckets, col("__bucket")), renameMap)
-        .write.mode(SaveMode.Overwrite)
-        .option("maxRecordsPerFile", maxRowsPerBucketFile)
-        .partitionBy("__bucket").parquet(dataDir.toString)
-      val newFiles = statsLines(fs, for {
-        d <- fs.listStatus(dataDir).toSeq if d.isDirectory
-        f <- fs.listStatus(d.getPath)
-        if f.isFile && f.getPath.getName.endsWith(".parquet")
-      } yield s"$dataRel/${d.getPath.getName}/${f.getPath.getName}")
+      // An empty batch over a table with no unbucketed files rewrites
+      // nothing: the new version is the header plus the carried lines
+      // (a no-data micro-batch still lands as its own version).
+      val newFiles =
+        if (rows == 0 && touchedFiles.isEmpty) Seq.empty[String]
+        else {
+          val current = readFiles(spark, fs, touchedFiles,
+            Some(asNullable(outSchema)
+              .asInstanceOf[org.apache.spark.sql.types.StructType]),
+            dvSlicesOf(fs, v), renameMap)
+          // the checkpoint's census sized the key side: broadcast it
+          // up front when it fits Spark's own threshold, rather than
+          // letting AQE shuffle both sides before it switches
+          val keySide = latest.select(keyCols.map(col): _*)
+          val fits = rows * keySide.schema.defaultSize <=
+            spark.sessionState.conf.autoBroadcastJoinThreshold
+          val merged = current
+            .join(if (fits) broadcast(keySide) else keySide, keyCols,
+              "left_anti")
+            .unionByName(latest.where(col(opCol) =!= "D").drop(opCol))
+            .withColumn("__bucket", bucketOf(keyCols, numBuckets))
+          // write the rewrite hive-partitioned by bucket, then publish
+          // carried ∪ new manifests with optimistic disjoint-merge rebase
+          val dataRel = s"_data/commit-$newV-${java.util.UUID.randomUUID}"
+          val dataDir = new org.apache.hadoop.fs.Path(root, dataRel)
+          // Cluster the rewrite by bucket before writing: the anti-join
+          // leaves `merged` hash-partitioned on keyCols (Spark's Murmur3),
+          // which is UNCORRELATED with bucketOf's xxhash64 — so a
+          // partitionBy write from that layout emits up to tasks×buckets
+          // splinter files per commit (~512 at 32 shuffle partitions × 16
+          // buckets; guide §6 — small files hurt twice: manifest/stat
+          // lines AND per-file open cost on every later read). One
+          // explicit exchange on __bucket lands exactly one file per
+          // touched bucket — the bucketed-table layout the manifest
+          // pruning is designed around (Delta's optimized-write shape).
+          // Sub-split OVERSIZED buckets (VERDICT r18 ask #8): one file per
+          // touched bucket is the layout contract, but a hot bucket's
+          // single rewrite file is unbounded — maxRecordsPerFile rolls a
+          // bucket's file at `maxRowsPerBucketFile` rows (default 4M ≈
+          // the guide-§6 128 MB–1 GB file band at CDC row widths), so a
+          // skewed key caps FILE size while small merges still land ≤1
+          // file per bucket (SinksSpec pins both). Manifest pruning is
+          // per-file by path bucket, so multi-file buckets carry/rewrite
+          // exactly like single-file ones.
+          toPhysical(merged.repartition(numBuckets, col("__bucket")),
+            renameMap)
+            .write.mode(SaveMode.Overwrite)
+            .option("maxRecordsPerFile", maxRowsPerBucketFile)
+            .partitionBy("__bucket").parquet(dataDir.toString)
+          statsLines(fs, for {
+            d <- fs.listStatus(dataDir).toSeq if d.isDirectory
+            f <- fs.listStatus(d.getPath)
+            if f.isFile && f.getPath.getName.endsWith(".parquet")
+          } yield s"$dataRel/${d.getPath.getName}/${f.getPath.getName}")
+        }
       // carried files keep their deleted positions — their buckets'
       // DV slices carry verbatim; the rewritten (touched) buckets'
       // rows were DV-filtered above, so THEIR slices are DROPPED from
@@ -2340,12 +2370,22 @@ object GraftSink {
       * the requested keys hash to their buckets driver-side (|keys|
       * rows), the manifest prunes to ONLY those buckets' files (plus
       * any unbucketed plain-commit files, which can hold any key), and
-      * one broadcast semi-join filters rows. A 1-key lookup on a
-      * fully-bucketed table reads 1/numBuckets of the data at any
-      * table size. */
+      * one `IN` filter over the typed key values selects rows. A 1-key
+      * lookup on a fully-bucketed table reads 1/numBuckets of the data
+      * at any table size.
+      *
+      * Job shape: building the DataFrame runs NO Spark job — the bucket
+      * routing hashes a local relation, which Spark folds into a local
+      * scan — and collecting it runs ONE (the pruned scan; a live
+      * deletion vector adds its anti-join). Keys are cast to the
+      * table's column types before hashing: an Int 7 and a Long 7 hash
+      * to different buckets. A key with a null component matches no
+      * row, as in an equi-join. */
     def lookup(spark: org.apache.spark.sql.SparkSession,
                keyCols: Seq[String], keys: Seq[Seq[Any]],
                numBuckets: Int = 64): DataFrame = {
+      import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
       require(keys.nonEmpty, "lookup needs at least one key")
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sessionState.newHadoopConf())
@@ -2355,19 +2395,33 @@ object GraftSink {
         s"$path: table is bucketed into $b buckets (manifest #buckets); " +
           s"lookup with $numBuckets would prune the wrong buckets and " +
           "silently miss rows — pass the table's spec"))
-      val keyDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(
-          keys.map(org.apache.spark.sql.Row.fromSeq), 1),
-        org.apache.spark.sql.types.StructType(keyCols.map(c =>
-          read(spark).schema(c))))
-      val wanted = keyDf.select(bucketOf(keyCols, numBuckets).as("__b"))
-        .distinct().collect().map(_.getLong(0)).toSet
+      val schema = versionSchema(fs, v).getOrElse(read(spark).schema)
+      val keySchema = org.apache.spark.sql.types.StructType(
+        keyCols.map(schema(_)))
+      val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+      val typed = keys.map { k =>
+        require(k.length == keyCols.length,
+          s"lookup key $k does not match key columns $keyCols")
+        org.apache.spark.sql.Row.fromSeq(k.zip(keySchema.fields).map {
+          case (x, f) => CatalystTypeConverters.convertToScala(
+            Cast(Literal(x), f.dataType, tz).eval(), f.dataType)
+        })
+      }.filterNot(_.anyNull)
+      val wanted = spark.createDataFrame(typed.asJava, keySchema)
+        .select(bucketOf(keyCols, numBuckets)).collect()
+        .map(_.getLong(0)).toSet
       val files = manifestFiles(fs, v).filter(rel =>
         pathBucket(rel).forall(wanted.contains))
-      if (files.isEmpty) return read(spark).limit(0)
-      readFiles(spark, fs, files, versionSchema(fs, v), dvSlicesOf(fs, v),
-        renameOf(fs, v))
-        .join(broadcast(keyDf), keyCols, "left_semi")
+      def value(r: org.apache.spark.sql.Row, i: Int): Column =
+        lit(r.get(i)).cast(keySchema(i).dataType)
+      val hit = keyCols match {
+        case Seq(c) => col(c).isin(typed.map(value(_, 0)): _*)
+        case _ => struct(keyCols.map(col): _*).isin(typed.map(r =>
+          struct(keyCols.indices.map(i =>
+            value(r, i).as(keyCols(i))): _*)): _*)
+      }
+      readFiles(spark, fs, files, Some(schema), dvSlicesOf(fs, v),
+        renameOf(fs, v)).where(hit)
     }
 
     /** CHANGE DATA FEED between versions (Delta's `table_changes`):

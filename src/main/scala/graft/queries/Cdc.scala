@@ -3574,19 +3574,20 @@ object Cdc {
     * (one per query start; at 100 TB a pass over the feed's row-group
     * metadata across the cluster), while the footer record count is a
     * driver-side metadata read of the same number — identical to
-    * count() by construction (no filter, footer row counts are exact). */
-  private def eventsRowCount(s: SparkSession, dir: String): Long = {
+    * count() by construction (no filter, footer row counts are exact).
+    * The listing recurses, so a partitioned (`k=v/`) layout counts
+    * every file; hidden `_`/`.` files are skipped as Spark skips them. */
+  private[graft] def eventsRowCount(s: SparkSession, dir: String): Long = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = s.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
     val fs = p.getFileSystem(conf)
-    val files =
-      if (fs.getFileStatus(p).isDirectory)
-        fs.listStatus(p).toSeq.filter(st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet"))
-      else Seq(fs.getFileStatus(p))
-    files.map { st =>
+    val it = fs.listFiles(p, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { st =>
+      val n = st.getPath.getName
+      n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")
+    }.map { st =>
       val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
       try r.getRecordCount finally r.close()
     }.sum

@@ -566,4 +566,14 @@ class CdcStreamSpec extends SparkSpec {
     assert(expected > 0, "generator parameters produced no matches")
     assert(spark.table("ssj_gen").count() === expected)
   }
+
+  test("eventsRowCount equals count() on a partitioned events.parquet") {
+    val dir = tmp("events-partitioned")
+    val feed = s"$dir/events.parquet"
+    batchEvents.withColumn("part", col("event_id") % 3)
+      .write.partitionBy("part").parquet(feed)
+    val want = spark.read.parquet(feed).count()
+    assert(want > 0)
+    assert(graft.queries.Cdc.eventsRowCount(spark, dir) === want)
+  }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.graft.JobCount
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.cdc._
@@ -516,6 +517,108 @@ class SinksSpec extends SparkSpec {
     val (dataGone, _) = vt.vacuum(spark, retainLast = 1)
     assert(dataGone > 0)
     assert(vt.read(spark).count() === 63L)
+  }
+
+  test("VersionedTable job shape: building a lookup runs 0 jobs and " +
+    "collecting it 1; a small bucketed merge runs <= 5; an empty batch " +
+    "runs 0 and republishes the same files") {
+    import spark.implicits._
+    val path = tmp("vtable-jobs")
+    val vt = GraftSink.VersionedTable(path)
+    val sc = spark.sparkContext
+    def batch(rows: (Long, Long, String, String)*): DataFrame =
+      rows.toSeq.toDF("key", "seq", "op", "payload")
+    vt.mergeBucketed(batch((0L until 64L).map(k =>
+      (k, k, "I", s"v$k")): _*), Seq("key"), Seq("seq"), numBuckets = 8)
+    val (hit, buildJobs) = JobCount(sc)(vt.lookup(spark, Seq("key"),
+      Seq(Seq(3L), Seq(40L), Seq(999L)), numBuckets = 8))
+    assert(buildJobs === 0)
+    val (rows, runJobs) = JobCount(sc)(
+      hit.select("key", "payload").as[(Long, String)].collect())
+    assert(rows.sorted === Array((3L, "v3"), (40L, "v40")))
+    assert(runJobs === 1)
+    val (_, mergeJobs) = JobCount(sc)(vt.mergeBucketed(
+      batch((3L, 100L, "U", "w3"), (5L, 101L, "D", "x"),
+        (70L, 102L, "I", "v70")), Seq("key"), Seq("seq"), numBuckets = 8))
+    assert(mergeJobs <= 5, s"small merge ran $mergeJobs jobs")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    def fileLines(v: Long): List[String] = {
+      val in = fs.open(new org.apache.hadoop.fs.Path(
+        path, s"_manifests/v$v.manifest"))
+      try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+        .filter(l => l.nonEmpty && !l.startsWith("#")).toList
+      finally in.close()
+    }
+    val before = vt.currentVersion(spark)
+    val (v, emptyJobs) = JobCount(sc)(
+      vt.mergeBucketed(batch(), Seq("key"), Seq("seq"), numBuckets = 8))
+    assert(emptyJobs === 0)
+    assert(v === before + 1)
+    assert(fileLines(v) === fileLines(before))
+    assertSameRows(vt.read(spark), vt.readVersion(spark, before))
+  }
+
+  test("VersionedTable.lookup equals read().where(...): composite key, " +
+    "Int value on a Long column, DV-deleted row, unbucketed file, " +
+    "absent key") {
+    import spark.implicits._
+    val vt = GraftSink.VersionedTable(tmp("vtable-lookup-eq"))
+    vt.mergeBucketed((0L until 64L).map(k => (k, k, "I", s"v$k"))
+      .toDF("key", "seq", "op", "payload"), Seq("key"), Seq("seq"),
+      numBuckets = 8)
+    vt.deleteWhere(spark, col("key") === 9L)
+    vt.commit(Seq((1000L, 1L, "plain")).toDF("key", "seq", "payload"))
+    def same(keys: Seq[Seq[Any]], cond: Column, n: Long): Unit = {
+      val got = vt.lookup(spark, Seq("key"), keys, numBuckets = 8)
+      assertSameRows(got, vt.read(spark).where(cond))
+      assert(got.count() === n)
+    }
+    // an Int key must hash as the Long column: pick one whose Int and
+    // Long hashes land in different buckets, so a mistyped hash misses
+    val intKey = (0 until 64).find { k =>
+      val r = spark.range(1).select(pmod(xxhash64(lit(k)), lit(8L)),
+        pmod(xxhash64(lit(k.toLong)), lit(8L))).head()
+      r.getLong(0) != r.getLong(1) && k != 9
+    }.get
+    same(Seq(Seq(intKey)), col("key") === intKey.toLong, 1)
+    same(Seq(Seq(9L)), col("key") === 9L, 0) // removed by the DV
+    same(Seq(Seq(1000L)), col("key") === 1000L, 1) // unbucketed file
+    same(Seq(Seq(123456L)), col("key") === 123456L, 0) // absent
+    same(Seq(Seq(intKey), Seq(9L), Seq(1000L), Seq(123456L), Seq(null)),
+      col("key").isin(intKey.toLong, 9L, 1000L, 123456L), 2)
+    val ct = GraftSink.VersionedTable(tmp("vtable-lookup-composite"))
+    ct.mergeBucketed((0L until 40L).flatMap(a => Seq("x", "y").map(b =>
+      (a, b, a, "I", s"$a$b"))).toDF("a", "b", "seq", "op", "payload"),
+      Seq("a", "b"), Seq("seq"), numBuckets = 4)
+    val got = ct.lookup(spark, Seq("a", "b"),
+      Seq(Seq(3L, "x"), Seq(3L, "z"), Seq(17, "y")), numBuckets = 4)
+    assertSameRows(got, ct.read(spark).where(
+      (col("a") === 3L && col("b") === "x") ||
+        (col("a") === 17L && col("b") === "y")))
+    assert(got.count() === 2)
+  }
+
+  test("VersionedTable.mergeBucketed equals merge row for row over a " +
+    "feed with 'D' tombstones and an empty batch") {
+    import spark.implicits._
+    val bucketed = GraftSink.VersionedTable(tmp("vtable-feed-bucketed"))
+    val full = GraftSink.VersionedTable(tmp("vtable-feed-full"))
+    val feed: Seq[Seq[(Long, Long, String, String)]] = Seq(
+      (0L until 40L).map(k => (k, k, "I", s"a$k")),
+      Seq((1L, 100L, "U", "b1"), (2L, 101L, "D", "x"), (2L, 102L, "I", "b2"),
+        (3L, 103L, "U", "b3"), (3L, 104L, "D", "x"),
+        (50L, 105L, "I", "n50"), (51L, 106L, "D", "x")),
+      Seq.empty,
+      Seq((4L, 200L, "D", "x"), (50L, 201L, "U", "c50"),
+        (3L, 202L, "I", "c3"), (5L, 203L, "D", "x")))
+    feed.foreach { rows =>
+      val b = rows.toDF("key", "seq", "op", "payload")
+      bucketed.mergeBucketed(b, Seq("key"), Seq("seq"), numBuckets = 4)
+      full.merge(b, Seq("key"), Seq("seq"))
+      assertSameRows(bucketed.read(spark), full.read(spark))
+    }
+    assert(bucketed.read(spark).count() === 39L)
   }
 
   test("VersionedTable.optimize + vacuum: content-identical rewrite, " +
